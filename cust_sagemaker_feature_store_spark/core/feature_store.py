@@ -284,22 +284,30 @@ class FeatureStore:
         explicit: an ingest/delete not followed by upsert_online used to
         be silently invisible to point lookups (round-2 advice,
         feature_store.py:221)."""
+        return self._fresh_snapshot_meta(name) is not None
+
+    def _fresh_snapshot_meta(self, name: str) -> dict | None:
+        """The snapshot's sidecar when the snapshot is current, else None
+        (see _snapshot_is_fresh)."""
         meta = read_snapshot_meta(self.spark, self.online_path(name))
-        if meta is None:
-            return False
-        return int(meta["seq_high"]) >= self._seq_base(name) - 1
+        if meta is None or int(meta["seq_high"]) < self._seq_base(name) - 1:
+            return None
+        return meta
 
     def _serving_view(self, name: str, key_values: list) -> DataFrame:
-        """Lookup path for the given keys: bucket-pruned scan of the
-        materialized snapshot when present AND current (reads
-        ~1/n_buckets of the store); a missing or stale snapshot falls
-        back to the always-fresh derived latest view."""
+        """Lookup path for the given keys: the materialized snapshot's
+        bucket directories for those keys when the snapshot is present
+        AND current (reads ~1/n_buckets of the store, one sidecar read
+        for both the freshness check and the bucket read); a missing or
+        stale snapshot falls back to the always-fresh derived latest
+        view."""
         group = self._groups[name]
-        if not self._snapshot_is_fresh(name):
+        meta = self._fresh_snapshot_meta(name)
+        if meta is None:
             return self.latest_view(name)
         snap = read_snapshot_bucket(
             self.spark, self.online_path(name),
-            [group.record_identifier], key_values,
+            [group.record_identifier], key_values, meta=meta,
         )
         return snap.filter(~F.col(DELETED_COL)).select(*group.feature_names)
 
@@ -309,12 +317,16 @@ class FeatureStore:
         """Point lookup: 0-or-1 latest record for a key, in the
         reference's wire shape (reference: real_time_inference.py:16-25).
         Returns None when the key is absent (reference:
-        real_time_inference.py:20-22)."""
+        real_time_inference.py:20-22).
+
+        Every serving view holds at most one row per key, so a plain
+        collect is the whole lookup: one job over the key's bucket
+        files, where a ``limit(1)`` would scan them a partition at a
+        time and start a second job whenever the first one misses."""
         group = self._groups[name]
         rows = (
             self._serving_view(name, [record_identifier_value])
             .filter(F.col(group.record_identifier) == F.lit(record_identifier_value))
-            .limit(1)
             .collect()
         )
         return row_to_record(rows[0]) if rows else None
@@ -358,8 +370,8 @@ class FeatureStore:
         later refreshes can be incremental (`upsert_online`) and point
         lookups prune to one bucket. Correct under any arrival order;
         the recovery/bootstrap path — steady-state refreshes should use
-        `upsert_online`. Records the bucket count and ingest high-water
-        mark in the snapshot sidecar (core/online.py)."""
+        `upsert_online`. Records the bucket count, ingest high-water
+        mark and schema in the snapshot sidecar (core/online.py)."""
         group = self._groups[name]
         # high-water mark BEFORE the build: history is append-only, so
         # the snapshot covers at least everything up to this sequence
@@ -371,7 +383,9 @@ class FeatureStore:
         snap.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(
             self.online_path(name), compression="snappy"
         )
-        write_snapshot_meta(self.spark, self.online_path(name), n_buckets, seq_high)
+        write_snapshot_meta(
+            self.spark, self.online_path(name), n_buckets, seq_high, snap.schema
+        )
 
     def upsert_online(
         self, name: str, batch: DataFrame, n_buckets: int | None = None
@@ -416,13 +430,12 @@ class FeatureStore:
         default: float = 0.0,
     ) -> list[float]:
         """P4/F5: numeric features for a key with missing->default
-        (reference: real_time_inference.py:47)."""
+        (reference: real_time_inference.py:47). One job, as get_record."""
         group = self._groups[name]
         row = (
             self._serving_view(name, [record_identifier_value])
             .filter(F.col(group.record_identifier) == F.lit(record_identifier_value))
             .select(*[double_with_default(c, default).alias(c) for c in feature_cols])
-            .limit(1)
             .collect()
         )
         if not row:

@@ -22,14 +22,34 @@ into ``MERGE INTO ... WHEN MATCHED``; semantics are identical.
 
 The snapshot directory carries a ``_snapshot_meta.json`` sidecar (an
 underscore-prefixed file, so parquet readers skip it — the _SUCCESS
-convention) recording the bucket count and the highest ingest sequence
-merged. The bucket count is the snapshot's PHYSICAL layout: a reader
-or upserter hashing with a different count would prune the wrong
-partitions and silently miss keys (round-2 advice, online.py:105) —
-so both paths resolve the count FROM the sidecar and refuse an
-explicit conflicting override. The sequence high-water mark lets the
-serving path detect a stale snapshot and fall back to the derived
-latest view (round-2 advice, feature_store.py:221).
+convention) recording the bucket count ``n_buckets``, the highest
+ingest sequence merged ``seq_high`` and the snapshot's ``schema``
+(``StructType.jsonValue()``, bucket column included). The bucket count
+is the snapshot's PHYSICAL layout: a reader or upserter hashing with a
+different count would prune the wrong partitions and silently miss keys
+(round-2 advice, online.py:105) — so both paths resolve the count FROM
+the sidecar and refuse an explicit conflicting override. The sequence
+high-water mark lets the serving path detect a stale snapshot and fall
+back to the derived latest view (round-2 advice, feature_store.py:221).
+
+A point lookup (``read_snapshot_bucket``) costs one Spark job, the
+caller's collect:
+
+1. the driver hashes the key with ``key_bucket``, a pure-Python XXH64
+   that reproduces ``bucket_expr`` (Spark's ``xxhash64``, seed 42, then
+   ``pmod``) for bigint, int, double and string keys — no probe
+   DataFrame;
+2. the read names only the key's ``bucket=<b>`` directory (``basePath``
+   keeps ``bucket`` a partition column, and the ``bucket`` filter stays
+   in the plan), so Spark lists one directory on the driver instead of
+   all ``n_buckets`` in a listing job;
+3. the read takes the sidecar's schema, so no schema-inference job runs.
+
+A batch lookup reads one directory per distinct bucket; past Spark's
+parallel-discovery threshold (32 paths) their listing is one more job.
+A snapshot whose sidecar predates the schema entry is read with schema
+inference; one with no sidecar at all is served unpruned (a full scan,
+never a guessed bucket count).
 
 The merged dirty slice takes a hop through a scratch directory before
 the dynamic overwrite: Spark (correctly) refuses to overwrite a path
@@ -45,9 +65,11 @@ records in future merges. Serving reads filter them out.
 from __future__ import annotations
 
 import json
+import struct
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.latest import latest_snapshot
 
@@ -59,6 +81,97 @@ META_FILE = "_snapshot_meta.json"
 def bucket_expr(keys: list[str], n_buckets: int) -> Column:
     """Stable key->bucket assignment (xxhash64, engine-deterministic)."""
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
+
+
+# -- driver-side twin of bucket_expr ----------------------------------------
+
+# Spark's xxhash64 is XXH64 (seed 42) over a bigint's or int's
+# little-endian bytes, a double's doubleToLongBits and a string's UTF-8
+_XXH_SEED = 42
+_P1, _P2, _P3, _P4, _P5 = (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5,
+)
+_M64 = (1 << 64) - 1
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int = _XXH_SEED) -> int:
+    """Unsigned XXH64 of ``data``."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed, (seed - _P1) & _M64]
+        while i + 32 <= n:
+            v = [_round(a, int.from_bytes(data[i + 8 * j:i + 8 * j + 8], "little"))
+                 for j, a in enumerate(v)]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for a in v:
+            h = ((h ^ _round(0, a)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h = (_rotl(h ^ _round(0, int.from_bytes(data[i:i + 8], "little")), 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h = (_rotl(h ^ (int.from_bytes(data[i:i + 4], "little") * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h = _rotl(h ^ (b * _P5 & _M64), 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def _expect(value, py_type: type, data_type: T.DataType) -> None:
+    # the exact-type rule of createDataFrame's schema check: a bool is
+    # not a bigint and an int is not a double
+    if type(value) is not py_type:
+        raise TypeError(
+            f"key {value!r} ({type(value).__name__}) does not fit a "
+            f"{data_type.simpleString()} key column"
+        )
+
+
+def _key_bytes(value, data_type: T.DataType) -> bytes:
+    """The bytes Spark's xxhash64 hashes for a non-null ``value`` of a
+    ``data_type`` column."""
+    if isinstance(data_type, (T.LongType, T.IntegerType)):
+        _expect(value, int, data_type)
+        width = 8 if isinstance(data_type, T.LongType) else 4
+        try:
+            return value.to_bytes(width, "little", signed=True)
+        except OverflowError:
+            raise ValueError(
+                f"key {value} is out of range for a {data_type.simpleString()} key column"
+            ) from None
+    if isinstance(data_type, T.DoubleType):
+        _expect(value, float, data_type)
+        if value != value:  # doubleToLongBits maps every NaN to one pattern
+            return struct.pack("<q", 0x7FF8000000000000)
+        return struct.pack("<d", value if value != 0.0 else 0.0)  # -0.0 hashes as 0.0
+    if isinstance(data_type, T.StringType):
+        _expect(value, str, data_type)
+        return value.encode("utf-8")
+    raise TypeError(
+        f"cannot bucket a {data_type.simpleString()} key on the driver "
+        "(bigint, int, double and string keys are supported)"
+    )
+
+
+def key_bucket(value, data_type: T.DataType, n_buckets: int) -> int:
+    """``bucket_expr``'s bucket for one key value, computed on the
+    driver. A null key keeps the seed as its hash, as in Spark."""
+    h = _XXH_SEED if value is None else _xxh64(_key_bytes(value, data_type))
+    return (h - (1 << 64) if h >> 63 else h) % n_buckets
 
 
 # -- sidecar metadata (Hadoop FS, so the same code reaches HDFS/S3) -------
@@ -79,13 +192,18 @@ def snapshot_exists(spark: SparkSession, snapshot_dir: str) -> bool:
 
 
 def write_snapshot_meta(
-    spark: SparkSession, snapshot_dir: str, n_buckets: int, seq_high: int
+    spark: SparkSession,
+    snapshot_dir: str,
+    n_buckets: int,
+    seq_high: int,
+    schema: T.StructType,
 ) -> None:
+    """Write the sidecar; ``schema`` is the written frame's schema, bucket
+    column included (a parquet read makes every field nullable)."""
+    meta = {"n_buckets": n_buckets, "seq_high": seq_high, "schema": schema.jsonValue()}
     fs, p = _hadoop(spark, snapshot_dir + "/" + META_FILE)
     out = fs.create(p, True)
-    out.write(bytearray(
-        json.dumps({"n_buckets": n_buckets, "seq_high": seq_high}).encode()
-    ))
+    out.write(bytearray(json.dumps(meta).encode()))
     out.close()
 
 
@@ -101,6 +219,28 @@ def read_snapshot_meta(spark: SparkSession, snapshot_dir: str) -> dict | None:
     finally:
         stream.close()
     return json.loads(raw)
+
+
+def _stored_schema(meta: dict | None) -> T.StructType | None:
+    """The sidecar's snapshot schema; None for a sidecar written before
+    the schema was recorded."""
+    if meta is None or "schema" not in meta:
+        return None
+    return T.StructType.fromJson(meta["schema"])
+
+
+def _read_buckets(
+    spark: SparkSession, snapshot_dir: str, schema: T.StructType, buckets: list[int]
+) -> DataFrame:
+    """The snapshot's existing ``bucket=<b>`` directories among
+    ``buckets``, read with ``schema``: no listing of the other buckets
+    and no schema inference. A bucket no key has hashed into yet has no
+    directory and contributes no rows."""
+    paths = [
+        p for p in (f"{snapshot_dir}/{BUCKET_COL}={b}" for b in buckets)
+        if snapshot_exists(spark, p)
+    ]
+    return spark.read.schema(schema).option("basePath", snapshot_dir).parquet(*paths)
 
 
 def _resolve_n_buckets(
@@ -164,11 +304,16 @@ def upsert_bucketed_snapshot(
             inc_latest.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(
                 snapshot_dir, compression="snappy"
             )
-            write_snapshot_meta(spark, snapshot_dir, n, seq_high)
+            write_snapshot_meta(spark, snapshot_dir, n, seq_high, inc_latest.schema)
             return
 
-        stored = spark.read.parquet(snapshot_dir)
         dirty = [r[0] for r in inc_latest.select(BUCKET_COL).distinct().collect()]
+        schema = _stored_schema(meta)
+        if schema is None:  # sidecar written before the schema was recorded
+            stored = spark.read.parquet(snapshot_dir)
+            schema = stored.schema
+        else:
+            stored = _read_buckets(spark, snapshot_dir, schema, dirty)
         stored_dirty = stored.filter(F.col(BUCKET_COL).isin(dirty))
         merged = latest_snapshot(
             stored_dirty.unionByName(inc_latest), key_list, event_time_col, tie_breaker
@@ -185,13 +330,9 @@ def upsert_bucketed_snapshot(
             .mode("overwrite")
             .parquet(snapshot_dir, compression="snappy")
         )
-        write_snapshot_meta(spark, snapshot_dir, n, seq_high)
+        write_snapshot_meta(spark, snapshot_dir, n, seq_high, schema)
     finally:
         inc_latest.unpersist()
-
-
-def read_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame:
-    return spark.read.parquet(snapshot_dir)
 
 
 def read_snapshot_bucket(
@@ -200,21 +341,28 @@ def read_snapshot_bucket(
     keys: list[str] | str,
     key_values: list,
     n_buckets: int | None = None,
+    meta: dict | None = None,
 ) -> DataFrame:
-    """Point/batch lookup path: prune the scan to the bucket partitions
-    the requested keys hash into (single-key groups only).
+    """Point/batch lookup path: the bucket partitions the requested
+    keys hash into (single-key groups only), hashed on the driver and
+    read by directory with the sidecar's schema (module docstring).
 
-    The bucket count comes from the snapshot's sidecar; a pre-sidecar
-    snapshot (no meta) is served UNPRUNED — correct, just a full scan —
-    rather than guessed at (a wrong guess silently misses keys)."""
+    ``meta`` is the sidecar when the caller has already read it. The
+    bucket count comes from it; a pre-sidecar snapshot (no meta) is
+    served UNPRUNED — correct, just a full scan — rather than guessed at
+    (a wrong guess silently misses keys)."""
     key_list = [keys] if isinstance(keys, str) else list(keys)
-    meta = read_snapshot_meta(spark, snapshot_dir)
-    snap = spark.read.parquet(snapshot_dir)
+    if meta is None:
+        meta = read_snapshot_meta(spark, snapshot_dir)
     if meta is None and n_buckets is None:
-        return snap
+        return spark.read.parquet(snapshot_dir)
     n = _resolve_n_buckets(meta, n_buckets, snapshot_dir)
-    probe = spark.createDataFrame(
-        [(v,) for v in key_values], f"{key_list[0]} {dict(snap.dtypes)[key_list[0]]}"
-    ).select(bucket_expr(key_list, n).alias("b"))
-    buckets = [r["b"] for r in probe.distinct().collect()]
+    schema, snap = _stored_schema(meta), None
+    if schema is None:  # sidecar written before the schema was recorded
+        snap = spark.read.parquet(snapshot_dir)
+        schema = snap.schema
+    key_type = schema[key_list[0]].dataType
+    buckets = sorted({key_bucket(v, key_type, n) for v in key_values})
+    if snap is None:
+        snap = _read_buckets(spark, snapshot_dir, schema, buckets)
     return snap.filter(F.col(BUCKET_COL).isin(buckets))

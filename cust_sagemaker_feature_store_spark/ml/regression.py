@@ -16,11 +16,13 @@ equality (SURVEY.md §7.3).
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.evaluation import RegressionEvaluator
 from pyspark.ml.feature import VectorAssembler
+from pyspark.ml.linalg import Vectors
 from pyspark.ml.regression import RandomForestRegressor
 from pyspark.sql import DataFrame, SparkSession
 
@@ -78,8 +80,13 @@ def predict_single(
     values: list[float],
 ) -> float:
     """M3: single-row prediction — the online inference path
-    (reference: real_time_inference.py:50-59)."""
-    df = spark.createDataFrame(
-        [tuple(values)], ", ".join(f"{c} double" for c in feature_cols)
-    )
-    return float(model.transform(df).head()["prediction"])
+    (reference: real_time_inference.py:50-59). The fitted forest (the
+    pipeline's last stage) predicts on the driver, so the call runs no
+    Spark job; ``spark`` is unused. A None or NaN value raises, as the
+    pipeline's VectorAssembler (handleInvalid="error") does."""
+    if len(values) != len(feature_cols):
+        raise ValueError(f"{len(values)} values for {len(feature_cols)} features {feature_cols}")
+    bad = [c for c, v in zip(feature_cols, values) if v is None or math.isnan(v)]
+    if bad:
+        raise ValueError(f"null or NaN feature value in {bad} (handleInvalid='error')")
+    return float(model.stages[-1].predict(Vectors.dense(values)))

@@ -4,6 +4,11 @@ lookup with defaults, timestamp normalization round-trip."""
 
 from __future__ import annotations
 
+import json
+import os
+import random
+import uuid
+
 import pytest
 
 from cust_sagemaker_feature_store_spark.core import (
@@ -11,11 +16,18 @@ from cust_sagemaker_feature_store_spark.core import (
     FeatureGroup,
     FeatureStore,
 )
+from cust_sagemaker_feature_store_spark.core.online import (
+    bucket_expr,
+    key_bucket,
+    read_snapshot_meta,
+)
 from cust_sagemaker_feature_store_spark.functions import (
     format_iso_z,
     parse_loose_timestamp,
 )
+from cust_sagemaker_feature_store_spark.plans import partition_filters
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 GROUP = FeatureGroup(
     name="CustomerTransactions",
@@ -646,3 +658,123 @@ def test_bitemporal_pin_is_stable_under_late_data(spark):
     assert before == after == [(1, 11, 2.0), (2, 12, 5.0)]
     # without the knowledge pin the late record rewrites history
     assert snap(base.unionByName(late), pin_knowledge=False) != before
+
+
+# -- driver-side bucketing and one-job point lookups ----------------------
+
+_rng = random.Random(20)
+BUCKET_KEYS = {
+    "bigint": [-(2**63), 2**63 - 1, 0, -1, 1, -7, 2**31, -(2**31) - 1, None]
+    + [_rng.randint(-(2**63), 2**63 - 1) for _ in range(200)],
+    "int": [-(2**31), 2**31 - 1, 0, -1, 1, -7, None]
+    + [_rng.randint(-(2**31), 2**31 - 1) for _ in range(100)],
+    "string": ["", "a", "7", "é", "日本語", "😀" * 9, "x" * 31, "x" * 32, "x" * 33,
+               "y" * 64, "z" * 100, "naïve-" * 13, None]
+    + ["".join(chr(_rng.randint(32, 0x2FFF)) for _ in range(_rng.randint(0, 70)))
+       for _ in range(200)],
+    "double": [0.0, -0.0, float("nan"), float("inf"), float("-inf"), 1.5, -2.25,
+               5e-324, 1.7976931348623157e308, None]
+    + [_rng.uniform(-1e12, 1e12) for _ in range(100)],
+}
+
+
+@pytest.mark.parametrize("ddl", sorted(BUCKET_KEYS))
+def test_key_bucket_matches_spark_bucket_expr(spark, ddl):
+    # the driver-side hash must pick the bucket Spark wrote the key to
+    keys = BUCKET_KEYS[ddl]
+    df = spark.createDataFrame([(i, k) for i, k in enumerate(keys)], f"i int, k {ddl}")
+    key_type = df.schema["k"].dataType
+    counts = (1, 16, 64, 1000)
+    rows = df.select("i", *[bucket_expr(["k"], n).alias(f"b{n}") for n in counts]).collect()
+    assert len(rows) == len(keys)
+    for r in rows:
+        for n in counts:
+            assert key_bucket(keys[r["i"]], key_type, n) == r[f"b{n}"], (keys[r["i"]], n)
+
+
+def test_key_bucket_rejects_keys_that_do_not_fit_the_column():
+    # the exact-type rule of createDataFrame's schema check: never hash
+    # the bytes of a value the key column could not hold
+    mistyped = [
+        ("7", T.LongType()), (True, T.LongType()), (7.0, T.LongType()),
+        ("7", T.IntegerType()), (7, T.DoubleType()), ("1.5", T.DoubleType()),
+        (7, T.StringType()), (b"7", T.StringType()),
+    ]
+    for value, key_type in mistyped:
+        with pytest.raises(TypeError):
+            key_bucket(value, key_type, 64)
+    with pytest.raises(ValueError):
+        key_bucket(2**63, T.LongType(), 64)
+    with pytest.raises(ValueError):
+        key_bucket(2**31, T.IntegerType(), 64)
+    with pytest.raises(TypeError):
+        key_bucket(7, T.DateType(), 64)
+
+
+def _with_job_count(spark, fn, *args):
+    """(fn(*args), number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count test")
+    try:
+        result = fn(*args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job starts reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_point_lookup_on_fresh_snapshot_is_one_job(store, spark):
+    store.materialize_online(GROUP.name)
+    for key, value in ((1, "20.0"), (2, "31.0"), (3, "40.0")):
+        rec, jobs = _with_job_count(spark, store.get_record, GROUP.name, key)
+        assert {f["FeatureName"]: f["ValueAsString"] for f in rec}["latest_purchase_value"] == value
+        assert jobs == 1
+    rec, jobs = _with_job_count(spark, store.get_record, GROUP.name, 424242)
+    assert rec is None and jobs <= 1
+    vec, jobs = _with_job_count(
+        spark, store.feature_vector, GROUP.name, 3, ["latest_purchase_value"]
+    )
+    assert vec == [40.0] and jobs <= 1
+    # a key whose Python type does not fit the key column is refused
+    with pytest.raises(TypeError):
+        store.get_record(GROUP.name, "7")
+    # a stale snapshot still answers, through the derived latest view
+    store.ingest(GROUP.name, store.spark.createDataFrame(
+        [(3, "2023-01-01T00:00:00Z", 41.0, 1.0)],
+        "customer_id long, event_time string, latest_purchase_value double, latest_loyalty_score double",
+    ))
+    assert store.feature_vector(GROUP.name, 3, ["latest_purchase_value"]) == [41.0]
+
+
+def test_sidecar_schema_and_pre_schema_sidecars(store, spark):
+    store.materialize_online(GROUP.name, n_buckets=16)
+    path = store.online_path(GROUP.name)
+    meta = read_snapshot_meta(spark, path)
+    stored = T.StructType.fromJson(meta["schema"])
+    read_back = spark.read.parquet(path).schema
+    assert [(f.name, f.dataType) for f in stored] == [(f.name, f.dataType) for f in read_back]
+    # a sidecar written before the schema was recorded: lookups infer the
+    # schema, still prune to the key's bucket, and the next upsert
+    # records the schema again
+    meta_file = os.path.join(path, "_snapshot_meta.json")
+    with open(meta_file, "w") as fh:
+        json.dump({k: v for k, v in meta.items() if k != "schema"}, fh)
+    crc = os.path.join(path, "._snapshot_meta.json.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    pruned = store._serving_view(GROUP.name, [2])
+    assert "bucket" in partition_filters(pruned)[0].lower()
+    d = {f["FeatureName"]: f["ValueAsString"] for f in store.get_record(GROUP.name, 2)}
+    assert d["latest_purchase_value"] == "31.0"
+    out = store.ingest(GROUP.name, spark.createDataFrame(
+        [(2, "2022-09-01T00:00:00Z", 32.0, 0.5), (77, "2022-09-01T00:00:00Z", 7.0, 0.5)],
+        "customer_id long, event_time string, latest_purchase_value double, latest_loyalty_score double",
+    ))
+    store.upsert_online(GROUP.name, out)
+    assert "schema" in read_snapshot_meta(spark, path)
+    got = store.batch_get_record(GROUP.name, [1, 2, 3, 77, 78])
+    assert {k: {f["FeatureName"]: f["ValueAsString"] for f in v}["latest_purchase_value"]
+            for k, v in got.items()} == {1: "20.0", 2: "32.0", 3: "40.0", 77: "7.0"}

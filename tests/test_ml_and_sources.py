@@ -16,6 +16,7 @@ from cust_sagemaker_feature_store_spark.core import (
 )
 from cust_sagemaker_feature_store_spark.ml import (
     load_model,
+    predict,
     predict_single,
     save_model,
     train_regressor,
@@ -2828,3 +2829,28 @@ def test_png_subbyte_round_trips_and_jdk_interop(spark):
     # TYPE_BYTE_BINARY maps white->1 under the default 1-bit gray model
     assert ours.shape == (9, 13)
     assert np.array_equal(ours, bits)
+
+
+def test_predict_single_equals_batch_predict(spark):
+    # the driver-side forest must give bit-identical predictions to the
+    # pipeline's transform, with the features in assembler order
+    rng = random.Random(3)
+    rows = []
+    for _ in range(300):
+        x, z = rng.uniform(0, 10), rng.uniform(-5, 5)
+        rows.append((x, z, 0.5 * x - 0.3 * z + rng.random()))
+    model = train_regressor(
+        spark.createDataFrame(rows, "x double, z double, y double"), ["x", "z"], "y", num_trees=10
+    ).model
+    grid = [(x, z) for x in (-1.0, 0.0, 2.5, 5.0, 7.25, 9.99, 50.0) for z in (-6.0, -1.5, 0.0, 4.75)]
+    batch = predict(
+        model, spark.createDataFrame([(i, x, z) for i, (x, z) in enumerate(grid)], "i int, x double, z double")
+    ).collect()
+    want = {r["i"]: r["prediction"] for r in batch}
+    assert [predict_single(model, spark, ["x", "z"], list(v)) for v in grid] == [
+        want[i] for i in range(len(grid))
+    ]
+    # VectorAssembler's handleInvalid="error": no prediction from a hole
+    for bad in ([None, 1.0], [1.0, float("nan")]):
+        with pytest.raises(ValueError):
+            predict_single(model, spark, ["x", "z"], bad)

@@ -1,9 +1,10 @@
 """Capture `.explain("formatted")` output for named registry queries.
 
-Writes plans/$PLANS_ROUND/<query>_<tag>.txt (default r17) for each query — the before/after
+Writes plans/$PLANS_ROUND/<query>_<tag>.txt for each query — the before/after
 plan evidence the optimization rounds commit alongside code changes.
+PLANS_ROUND (e.g. r18) is required: the tool exits with a message when it is unset.
 
-Usage: python tools/capture_plans.py <tag> [sf_dir] <query ...>
+Usage: PLANS_ROUND=<round> python tools/capture_plans.py <tag> [sf_dir] <query ...>
   tag     "before" or "after" (file suffix)
   sf_dir  optional, defaults to /root/testdata/sf0.1
 """
@@ -24,6 +25,13 @@ def main() -> int:
     if not args:
         print(__doc__)
         return 2
+    plans_round = os.environ.get("PLANS_ROUND")
+    if not plans_round:
+        print(
+            "PLANS_ROUND is not set: name the round directory under plans/, e.g. PLANS_ROUND=r18",
+            file=sys.stderr,
+        )
+        return 2
     tag = args[0]
     rest = args[1:]
     sf_dir = "/root/testdata/sf0.1"
@@ -33,7 +41,7 @@ def main() -> int:
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        os.environ.get("PLANS_ROUND", "r17"),
+        plans_round,
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("capture_plans")
